@@ -186,8 +186,7 @@ class Loop:
     """Closed-loop, single-client operation timer. Every call to
     :meth:`op` is one attempted operation; its CPU time is added to
     ``cpu_s``, outside its latency. Latencies are kept per phase:
-    ``warmup`` (first executions in a fresh session), ``settle`` (warm
-    executions while the JIT is still compiling), ``measure`` (the
+    ``warmup`` (first executions in a fresh session), ``measure`` (the
     samples behind the latency metrics) and ``final`` (end-of-run work).
     An operation that raises marks the run as failed and stops it."""
 
@@ -196,7 +195,7 @@ class Loop:
         self.attempted = 0
         self.failed = 0
         self.phases: dict[str, list[float]] = {
-            "warmup": [], "settle": [], "measure": [], "final": []}
+            "warmup": [], "measure": [], "final": []}
         self.kinds: dict[str, list[float]] = {}
         self.cpu_s = 0.0
         self.errors: list[str] = []

@@ -12,10 +12,12 @@ The exit code is 0 only when no operation failed and every check passed;
 a failed run reports ``correct: false`` and no timings.
 
 Workloads (``wl_*.py``; each module's docstring says why it exists):
-``catalog`` and ``pypi-graph`` are the two in BENCHMARK.json;
-``curation`` and ``stream-ingest`` run the same way by hand. A workload
-does a fixed amount of work per ``--seconds``: its warm operations are
-``--seconds`` divided by a nominal operation time fixed in its module.
+``catalog``, ``pypi-graph`` and ``stream-ingest`` are the three in
+BENCHMARK.json; ``curation`` runs the same way by hand. A workload does
+a fixed amount of work per ``--seconds``: its warm operations are
+``--seconds`` divided by a nominal operation time fixed in its module,
+with a floor of a few operations so that a median has samples to take.
+The metric names and units are those BENCHMARK.json lists.
 
 End-to-end metrics (``--trace 0``), one value per run:
 
@@ -35,7 +37,7 @@ End-to-end metrics (``--trace 0``), one value per run:
 
 ``--trace 1`` is a separate run of the same work with spans around the
 calls into each layer (``harness.Tracer``); it reports the per-layer
-metrics in PER_LAYER, 0 for layers the workload does not run, and its
+metrics, 0 for layers the workload does not run, and its
 own cost: ``trace.op_s`` against the untraced ``op_s``, and the span
 bookkeeping time ``trace.overhead_s``. The spans themselves go to
 ``perfbench/_traces/<workload>-<seed>.json``."""
@@ -66,37 +68,17 @@ WORKLOADS = {
     "stream-ingest": "wl_stream",
 }
 
-E2E = {"setup_s": "s", "op_s": "s", "cold_s": "s", "wall_s": "s", "cpu_s": "s"}
 
-PER_LAYER = {
-    "session.start_s": "s",
-    "catalog.build_s": "s", "catalog.plan_s": "s", "catalog.exec_s": "s",
-    "catalog.jobs": "count", "catalog.stages": "count", "catalog.tasks": "count",
-    "catalog.shuffle_write_bytes": "bytes", "catalog.spill_bytes": "bytes",
-    "catalog.gc_ms": "ms",
-    "materialize.pinned_rdds": "count",
-    "operators.exact_dedup_s": "s", "operators.fuzzy_dedup_s": "s",
-    "operators.decontam_s": "s", "operators.quality_s": "s",
-    "operators.mixture_s": "s", "operators.chunks_s": "s",
-    "curation.exact_dedup_s": "s", "curation.fuzzy_dedup_s": "s",
-    "curation.decontam_s": "s", "curation.quality_s": "s",
-    "curation.mixture_s": "s", "curation.chunks_s": "s",
-    "curation.jobs": "count", "curation.shuffle_write_bytes": "bytes",
-    "curation.spill_bytes": "bytes", "curation.exec_cpu_ms": "ms",
-    "curation.lsh_candidate_pairs": "count", "curation.lsh_pair_yield": "ratio",
-    "sources.crawl_s": "s", "plans.execute_s": "s", "plans.validate_s": "s",
-    "plans.validate_jobs": "count", "graph.group_s": "s",
-    "sources.export_s": "s", "sources.export_bytes": "bytes",
-    "engine.save_s": "s", "engine.bytes_written": "bytes",
-    "engine.stored_bytes_ratio": "ratio",
-    "er.resolve_s": "s", "er.candidate_pairs": "count", "er.match_yield": "ratio",
-    "er.clusters": "count", "er.pair_f1": "ratio",
-    "streaming.agg_batch_s": "s", "streaming.dedup_batch_s": "s",
-    "streaming.state_rows": "count", "streaming.state_memory_bytes": "bytes",
-    "streaming.input_rows_per_s": "1/s", "streaming.merge_s": "s",
-    "driver.peak_rss_mb": "MiB",
-    "trace.op_s": "s", "trace.overhead_s": "s",
-}
+
+def metric_units(wl) -> tuple[dict[str, str], dict[str, str]]:
+    """(end-to-end, per-layer) metric name -> unit, as BENCHMARK.json
+    lists them, plus the per-layer metrics of a workload that is not in
+    it (its module's ``EXTRA_LAYERS``)."""
+    with open(os.path.join(ROOT, "BENCHMARK.json")) as fh:
+        spec = json.load(fh)
+    per_layer = {m["name"]: m["unit"] for m in spec["per_layer"]}
+    per_layer.update(getattr(wl, "EXTRA_LAYERS", {}))
+    return {m["name"]: m["unit"] for m in spec["end_to_end"]}, per_layer
 
 
 def deployment(work: str) -> dict[str, str]:
@@ -172,6 +154,8 @@ def run(args, work: str) -> int:
 
 
 def measure(args, work: str, wl, spark, setup_s: float) -> int:
+    from contextlib import nullcontext
+
     import numpy as np
     from pyspark import SparkContext
 
@@ -186,11 +170,12 @@ def measure(args, work: str, wl, spark, setup_s: float) -> int:
     wl.prepare(ctx)
     if hasattr(wl, "trace_hooks"):
         wl.trace_hooks(ctx)
-    sampler = RssSampler(SparkContext._gateway.proc.pid)
+    # peak memory is a per-layer metric: sample /proc in traced runs only
+    sampler = RssSampler(SparkContext._gateway.proc.pid) if args.trace else None
     errors: list[str] = []
     t_run = time.perf_counter()
     try:
-        with sampler:
+        with sampler or nullcontext():
             wl.run(ctx)
     except OperationFailed as exc:
         traceback.print_exc()
@@ -198,7 +183,9 @@ def measure(args, work: str, wl, spark, setup_s: float) -> int:
     finally:
         tracer.unwrap_all()
     t_check = time.perf_counter()
-    metrics = dict.fromkeys(PER_LAYER if args.trace else E2E, 0.0)
+    e2e, per_layer = metric_units(wl)
+    units = per_layer if args.trace else e2e
+    metrics = dict.fromkeys(units, 0.0)
     if not errors:
         try:
             errors = wl.check(ctx)
@@ -231,7 +218,7 @@ def measure(args, work: str, wl, spark, setup_s: float) -> int:
             "wall_s": loop.wall(),
             "cpu_s": loop.cpu_s,
         })
-    emit(ok, loop, metrics, PER_LAYER if args.trace else E2E)
+    emit(ok, loop, metrics, units)
     return 0 if ok else 1
 
 

@@ -5,9 +5,9 @@ the per-query floor (py4j plan build, Catalyst planning, job scheduling)
 dominates.
 
 The tables are the same in every run; the seed only reorders the
-queries. A run makes one cold pass over them, one settling pass while
-the JIT still compiles, then the measured passes. The cross-section holds
-the queries that run the stages of the
+queries. A run makes one cold pass over them, then at least two
+measured passes, so each query's latency is a median of two samples or
+more. The cross-section holds the queries that run the stages of the
 training-data funnel (examples/training_data_pipeline.py) through the
 ``operators`` package, plus every STRIDE-th query in name order, so each
 run covers the same spread of query families whatever the seed."""
@@ -21,9 +21,10 @@ import gen
 
 STRIDE = 40
 DATA_SEED = 0
-# Warm passes per run (the settling one included): --seconds of work at
-# this many seconds a pass.
+# Measured passes per run: --seconds of work at this many seconds a pass,
+# and at least MIN_PASSES.
 PASS_S = 4.0
+MIN_PASSES = 2
 # funnel stage -> the catalog query that runs it
 OPERATOR_QUERIES = {
     "exact_dedup": "q24_exact_dedup",
@@ -74,14 +75,12 @@ def run(ctx) -> None:
         ctx.results[name] = ctx.loop.op(_collect, ctx, name, qs[name], phase="warmup")
         clear_persisted(spark)
     quiesce(spark)
-    for i in range(max(2, round(ctx.seconds / PASS_S))):
+    for _ in range(max(MIN_PASSES, round(ctx.seconds / PASS_S))):
         for name in order:
             n0 = len(ctx.tracer.spans)
-            ctx.loop.op(_collect, ctx, name, qs[name],
-                        phase="measure" if i else "settle", kind=name)
+            ctx.loop.op(_collect, ctx, name, qs[name], kind=name)
             pinned = clear_persisted(spark)
-            if i:
-                ctx.per_query.append((name, n0, len(ctx.tracer.spans), pinned))
+            ctx.per_query.append((name, n0, len(ctx.tracer.spans), pinned))
         quiesce(spark)
 
 

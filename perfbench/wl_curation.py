@@ -16,6 +16,14 @@ import gen
 
 N_DOCS = 3000
 STAGES = ("exact_dedup", "fuzzy_dedup", "decontam", "quality", "mixture", "chunks")
+# This workload is not in BENCHMARK.json, so its per-layer metrics and
+# their units are listed here.
+EXTRA_LAYERS = {
+    **{f"curation.{s}_s": "s" for s in STAGES},
+    "curation.jobs": "count", "curation.shuffle_write_bytes": "bytes",
+    "curation.spill_bytes": "bytes", "curation.exec_cpu_ms": "ms",
+    "curation.lsh_candidate_pairs": "count", "curation.lsh_pair_yield": "ratio",
+}
 
 
 def prepare(ctx) -> None:

@@ -17,15 +17,17 @@ import pyarrow.parquet as pq
 import gen
 
 BATCH_ROWS = 400
-# Batches after the first: --seconds of work at this many seconds a batch.
-BATCH_S = 2.5
+# Batches after the first: --seconds of work at this many seconds a batch,
+# and at least MIN_BATCHES.
+BATCH_S = 2.0
+MIN_BATCHES = 7
 SCHEMA = "event_id long, user_id long, event_type string, ts timestamp, value double"
 DEDUP_SCHEMA = "event_id long, event_type string, value double"
 
 
 def prepare(ctx) -> None:
     ctx.batches = gen.stream_batches(
-        ctx.seed, 1 + max(3, round(ctx.seconds / BATCH_S)), BATCH_ROWS)
+        ctx.seed, 1 + max(MIN_BATCHES, round(ctx.seconds / BATCH_S)), BATCH_ROWS)
     ctx.land = os.path.join(ctx.work, "landing")
     ctx.firsts = os.path.join(ctx.work, "firsts")
     os.makedirs(ctx.land)
