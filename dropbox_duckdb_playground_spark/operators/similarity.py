@@ -32,23 +32,28 @@ def _concurrent_writes(*thunks) -> None:
     local properties (job group/tags, scheduler pool) propagate to the
     jobs these threads submit — plain ``threading.Thread`` would detach
     the staging writes from any future cancellation or pool scoping
-    (r11 ADVICE). All failures propagate after join: the first error is
-    raised with the rest attached as ``__notes__``-style context."""
+    (r11 ADVICE). All failures propagate after join: the error of the
+    first failing thunk in argument order (not in finishing order, which
+    varies run to run) is raised with the rest attached as
+    ``__notes__``-style context."""
     from pyspark import InheritableThread
 
-    errs: list[BaseException] = []
+    outcome: list[BaseException | None] = [None] * len(thunks)
 
-    def run(t):
+    def run(i, t):
         try:
             t()
         except BaseException as e:
-            errs.append(e)
+            outcome[i] = e
 
-    threads = [InheritableThread(target=run, args=(t,)) for t in thunks]
+    threads = [
+        InheritableThread(target=run, args=(i, t)) for i, t in enumerate(thunks)
+    ]
     for t in threads:
         t.start()
     for t in threads:
         t.join()
+    errs = [e for e in outcome if e is not None]
     if errs:
         first = errs[0]
         for extra in errs[1:]:

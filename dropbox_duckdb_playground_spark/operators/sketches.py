@@ -238,6 +238,10 @@ def bloom_bitmap(bits: DataFrame) -> list[int]:
     driver before broadcasting it into the probe-side scan)."""
     words = [0] * (BLOOM_M // 64)
     for (b,) in bits.select("bit").collect():
+        if b is None:
+            raise ValueError("bloom_bitmap: null bit")
+        if not 0 <= b < BLOOM_M:
+            raise ValueError(f"bloom_bitmap: bit {b} outside [0, {BLOOM_M})")
         words[b // 64] |= 1 << (b % 64)
     return words
 
@@ -251,9 +255,14 @@ def bloom_bitmap_agg(bits: DataFrame) -> list[int]:
     payload bounded BY CONSTRUCTION at any scale factor. Words are
     bit-identical to :func:`bloom_bitmap` / `bloom_bitmap_from_values`
     (same md5 positions; the shiftleft of bit 63 lands negative in the
-    JVM long and is re-read unsigned here), pinned by a parity test."""
+    JVM long and is re-read unsigned here), pinned by a parity test.
+    Raises ``ValueError`` for a null bit or one outside ``[0, BLOOM_M)``.
+
+    The check runs on the word index ``w``, kept a long (an int cast
+    could wrap a huge bit into range): ``w`` is in ``[0, m/64)`` exactly
+    when the bit is in ``[0, m)``, so it needs no extra pass."""
     rows = (
-        bits.groupBy(F.shiftright(F.col("bit"), 6).cast("int").alias("w"))
+        bits.groupBy(F.shiftright(F.col("bit"), 6).alias("w"))
         .agg(
             F.expr(
                 "bit_or(shiftleft(CAST(1 AS BIGINT), CAST(bit % 64 AS INT)))"
@@ -263,6 +272,13 @@ def bloom_bitmap_agg(bits: DataFrame) -> list[int]:
     )
     words = [0] * (BLOOM_M // 64)
     for r in rows:
+        if r["w"] is None:
+            raise ValueError("bloom_bitmap_agg: null bit")
+        if not 0 <= r["w"] < len(words):
+            lo = r["w"] * 64
+            raise ValueError(
+                f"bloom_bitmap_agg: a bit in [{lo}, {lo + 63}] is outside [0, {BLOOM_M})"
+            )
         words[r["w"]] = r["word"] & ((1 << 64) - 1)
     return words
 

@@ -178,6 +178,34 @@ def apply_storage_conf(spark: SparkSession, conf: dict[str, str]) -> None:
             spark.conf.set(k, v)
 
 
+_GIB = 1 << 30
+
+
+def host_sizing(
+    cores: int | None = None, mem_bytes: int | None = None
+) -> tuple[int, str]:
+    """``(cores, driver heap)`` for a local session.
+
+    ``SPARK_GRAFT_CPUS`` and ``SPARK_DRIVER_MEM`` win when set. Otherwise
+    the cores are those this process may run on, and the heap is physical
+    memory minus headroom for the OS, Python workers and off-heap buffers:
+    a quarter of it, at least 4 GiB, with a 1 GiB floor. ``cores`` and
+    ``mem_bytes`` stand in for the host's figures."""
+    if cores is None:
+        cores = (
+            len(os.sched_getaffinity(0))
+            if hasattr(os, "sched_getaffinity")
+            else os.cpu_count() or 1
+        )
+    if mem_bytes is None:
+        mem_bytes = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    heap_mb = max(_GIB, mem_bytes - max(4 * _GIB, mem_bytes // 4)) >> 20
+    return (
+        int(os.environ.get("SPARK_GRAFT_CPUS", cores)),
+        os.environ.get("SPARK_DRIVER_MEM", f"{heap_mb}m"),
+    )
+
+
 def get_spark(
     app_name: str = "dropbox_duckdb_playground_spark",
     master: str | None = None,
@@ -187,15 +215,17 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) the tuned SparkSession.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32)
-    so tests and bench share one code path; on a real cluster pass
+    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]``, and the driver
+    heap of a local master to ``$SPARK_DRIVER_MEM``; both default to the
+    host's figures (:func:`host_sizing`), so tests and bench share one
+    code path; on a real cluster pass
     ``master=None`` with ``spark.master`` preset in spark-submit.
 
     ``storage_conf`` is an object-store profile from :func:`s3a_conf` /
     :func:`gcs_conf` (or any ``spark.hadoop.*`` dict); pass it at build
     time so commit-protocol classes are in force for every write.
     """
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus, driver_mem = host_sizing()
     if master is None:
         master = os.environ.get("SPARK_MASTER", f"local[{cpus}]")
     if shuffle_partitions is None:
@@ -207,7 +237,7 @@ def get_spark(
     conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
     # local mode: driver is the only JVM — give it the memory.
     if master.startswith("local"):
-        conf.setdefault("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        conf.setdefault("spark.driver.memory", driver_mem)
     if storage_conf:
         conf.update(storage_conf)
     if extra_conf:

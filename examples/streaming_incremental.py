@@ -9,9 +9,10 @@ Parquet directory, fully locally:
   1. availableNow file stream   — consume exactly the files that exist,
                                   once, with checkpointed exactly-once
                                   delivery (the crawl-refresh analog)
-  2. stateful first-seen dedup  — applyInPandasWithState keyed dedup that
-                                  survives across micro-batches (the
-                                  streaming twin of etag keep-first merge)
+  2. stateful first-seen dedup  — Spark's native streaming dedup, keyed
+                                  state that survives across micro-batches
+                                  (the streaming twin of etag keep-first
+                                  merge)
   3. incremental aggregates     — algebraic partial states (sum/count/avg)
                                   merged batch-over-batch WITHOUT re-reading
                                   history, then finalized
@@ -115,10 +116,10 @@ def main() -> None:
     final.orderBy("event_type").show()
 
     # -- stateful first-seen dedup across the whole stream ------------
-    # applyInPandasWithState is a STREAM-only operator: replay the
-    # landing dir as an availableNow stream into a memory sink; the
-    # duplicate event 2 and the replayed event 3 are dropped by keyed
-    # state that survives across micro-batches.
+    # dedup state persists across micro-batches only in a stream:
+    # replay the landing dir as an availableNow stream into a memory
+    # sink; the duplicate event 2 and the replayed event 3 are dropped
+    # by Spark's streaming dedup state.
     stream = spark.readStream.schema(SCHEMA).parquet(land)
     firsts = first_seen_dedup(
         stream, key="event_id",

@@ -93,3 +93,23 @@ def test_open_cost_env_resolved_at_call_time(monkeypatch):
             warnings.simplefilter("always")
             assert _open_cost() == "524288"
         assert any("SPARK_GRAFT_OPEN_COST" in str(x.message) for x in w)
+
+
+def test_host_sizing_from_host_and_env(monkeypatch):
+    """Session defaults follow the host: every usable core, and physical
+    memory minus max(4 GiB, a quarter) as the driver heap (1 GiB floor).
+    SPARK_GRAFT_CPUS / SPARK_DRIVER_MEM override both."""
+    from dropbox_duckdb_playground_spark.session import host_sizing
+
+    gib = 1 << 30
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    monkeypatch.delenv("SPARK_DRIVER_MEM", raising=False)
+    assert host_sizing(4, 15 * gib) == (4, f"{11 * 1024}m")
+    assert host_sizing(64, 256 * gib) == (64, f"{192 * 1024}m")
+    assert host_sizing(1, 2 * gib) == (1, "1024m")
+    cores, heap = host_sizing()
+    assert cores >= 1 and heap.endswith("m") and int(heap[:-1]) >= 1024
+
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    monkeypatch.setenv("SPARK_DRIVER_MEM", "2g")
+    assert host_sizing(4, 15 * gib) == (3, "2g")

@@ -98,42 +98,126 @@ def test_incremental_file_stream_available_now(spark, tmp_path):
     assert sum(seen) == 2  # only the two new rows
 
 
-def test_first_seen_dedup_stateful(spark, tmp_path):
-    """Duplicate keys across micro-batches emit exactly once (state
-    persists across batches; maxFilesPerTrigger forces multiple)."""
-    import pandas as pd
-
+def _dedup_stream(spark, tmp_path, files, schema, **dedup):
+    """Land each row list in ``files`` as its own Parquet file, stream them
+    one file per micro-batch through ``first_seen_dedup`` and return
+    ``(output schema, [(batch id, row tuple), ...], query)``."""
     from dropbox_duckdb_playground_spark.streaming.stateful import (
         first_seen_dedup,
     )
 
     src = tmp_path / "in"
-    src.mkdir()
-    spark.createDataFrame(
-        [(1, "a"), (2, "b")], "k long, v string"
-    ).coalesce(1).write.parquet(str(src / "f1"))
-    spark.createDataFrame(
-        [(1, "dup"), (3, "c")], "k long, v string"
-    ).coalesce(1).write.parquet(str(src / "f2"))
-
+    for i, rows in enumerate(files):
+        spark.createDataFrame(rows, schema).coalesce(1).write.parquet(
+            str(src / f"f{i}")
+        )
     stream = (
-        spark.readStream.schema("k long, v string")
+        spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(str(src / "*"))
     )
-    out = first_seen_dedup(stream, "k", "k long, v string")
+    out = first_seen_dedup(stream, **dedup)
     got: list = []
     q = (
         out.writeStream.foreachBatch(
-            lambda df, _eid: got.extend(df.collect())
+            lambda df, eid: got.extend((eid, tuple(r)) for r in df.collect())
         )
         .option("checkpointLocation", str(tmp_path / "ckpt"))
         .trigger(availableNow=True)
         .start()
     )
     q.awaitTermination(120)
-    keys = sorted(r["k"] for r in got)
-    assert keys == [1, 2, 3]  # the duplicate k=1 emitted only once
+    assert q.exception() is None
+    return out.schema, got, q
+
+
+def test_first_seen_dedup_stateful(spark, tmp_path):
+    """Duplicate keys across micro-batches emit exactly once (state
+    persists across batches; maxFilesPerTrigger forces multiple)."""
+    _, got, _ = _dedup_stream(
+        spark, tmp_path, [[(1, "a"), (2, "b")], [(1, "dup"), (3, "c")]],
+        "k long, v string", key="k", out_schema="k long, v string",
+    )
+    assert sorted(r for _, r in got) == [(1, "a"), (2, "b"), (3, "c")]
+
+
+def test_first_seen_dedup_within_batch_and_null_key(spark, tmp_path):
+    """A key repeated inside one micro-batch is emitted once, and so is
+    the null key (null is one key, as in a groupBy)."""
+    _, got, _ = _dedup_stream(
+        spark, tmp_path,
+        [[(1, "a"), (1, "a2"), (None, "n1"), (None, "n2")],
+         [(None, "n3"), (2, "b")]],
+        "k long, v string", key="k", out_schema="k long, v string",
+    )
+    keys = [r[0] for _, r in got]
+    assert sorted(keys, key=lambda k: (k is not None, k)) == [None, 1, 2]
+    assert {r[1] for _, r in got if r[0] == 1} <= {"a", "a2"}
+    assert {r[1] for _, r in got if r[0] is None} <= {"n1", "n2"}
+
+
+def test_first_seen_dedup_projects_and_casts(spark, tmp_path):
+    """``out_schema`` keeps only its columns, casts each to its declared
+    type and puts the key first."""
+    schema, got, _ = _dedup_stream(
+        spark, tmp_path, [[(1, "a", 2.5), (1, "b", 3.0)]],
+        "k long, v string, x double",
+        key="k", out_schema="x string, k int",
+    )
+    assert schema.simpleString() == "struct<k:int,x:string>"
+    assert [r for _, r in got] in ([(1, "2.5")], [(1, "3.0")])
+
+
+def test_first_seen_dedup_ttl_reemits_after_watermark(spark, tmp_path):
+    """With an event-time ttl, a duplicate inside the window is dropped;
+    once the watermark passes first-seen time + ttl the key's state
+    expires and the key is emitted again."""
+    import datetime as dt
+
+    t0 = dt.datetime(2024, 1, 1)
+
+    def ts(m):
+        return t0 + dt.timedelta(minutes=m)
+
+    _, got, q = _dedup_stream(
+        spark, tmp_path,
+        [[(1, "a", ts(0))],
+         [(1, "dup", ts(1)), (2, "b", ts(30))],  # watermark -> 0:20
+         [(3, "c", ts(40))],  # evicts k=1 (expiry 0:10 < 0:20)
+         [(1, "again", ts(41))]],
+        "k long, v string, t timestamp",
+        key="k", out_schema="k long, v string", event_time="t",
+        ttl="10 minutes",
+    )
+    assert got == [(0, (1, "a")), (1, (2, "b")), (2, (3, "c")), (3, (1, "again"))]
+    assert all(p["eventTime"].get("watermark") for p in q.recentProgress)
+
+
+def test_first_seen_dedup_rejects_bad_arguments(spark):
+    from dropbox_duckdb_playground_spark.streaming.stateful import (
+        first_seen_dedup,
+    )
+
+    df = spark.createDataFrame([(1, "a")], "k long, v string")
+    with pytest.raises(ValueError, match="event_time"):
+        first_seen_dedup(df, "k", "k long, v string", ttl="1 hour")
+    with pytest.raises(ValueError, match="key"):
+        first_seen_dedup(df, "k", "v string")
+    with pytest.raises(ValueError, match="lacks"):
+        first_seen_dedup(df, "k", "k long, nope string")
+
+
+def test_first_seen_dedup_plan_is_native(spark, tmp_path, capsys):
+    """The dedup runs as Spark's StreamingDeduplicate, not as a Python
+    stateful operator: no row goes to a Python worker."""
+    _, _, q = _dedup_stream(
+        spark, tmp_path, [[(1, "a")]], "k long, v string",
+        key="k", out_schema="k long, v string",
+    )
+    q.explain()
+    plan = capsys.readouterr().out
+    assert "StreamingDeduplicate" in plan
+    assert "FlatMapGroupsInPandasWithState" not in plan
 
 
 def test_running_totals_stateful(spark, tmp_path):

@@ -108,6 +108,20 @@ class TestBloom:
         w = SK.bloom_bitmap_agg(edge)
         assert w[0] == 1 << 63 and w[-1] == 1 << 63
 
+    @pytest.mark.parametrize("pack", ["bloom_bitmap_agg", "bloom_bitmap"])
+    @pytest.mark.parametrize(
+        "bit, match",
+        [(None, "null bit"), (-1, "outside"), (SK.BLOOM_M, "outside")],
+        ids=["null", "negative", "too_large"],
+    )
+    def test_bitmap_rejects_bad_bits(self, spark, pack, bit, match):
+        # a negative bit used to land silently in a wrong word through
+        # Python's negative indexing; a null or too-large one crashed
+        # with an unrelated TypeError/IndexError
+        bits = spark.createDataFrame([(5,), (bit,)], "bit long")
+        with pytest.raises(ValueError, match=match):
+            getattr(SK, pack)(bits)
+
     def test_python_bitmap_contains(self, spark, ids):
         values = [r.v for r in ids.collect()]
         words = SK.bloom_bitmap_from_values(values)
