@@ -1,12 +1,13 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
-The driver's verify runs ``entry(spark)`` as a smoke check, runs
-each ``queries()[name]`` at sf=0.01 and compares it against the
-matching ``oracle_sql()[name]`` via DuckDB (row-count + schema +
-order-insensitive value-hash → CORRECTNESS_r{N}.json).
+``entry(spark)`` is the smoke check. ``queries()`` returns every
+catalog query in registration order, and each one is compared against
+the matching ``oracle_sql()[name]`` via DuckDB (row count + schema +
+order-insensitive value hash; ``tools/check.py`` and the Tier-1
+``tests/test_driver_contract.py`` run that comparison for all of them).
 
 All query definitions live in ``dropbox_duckdb_playground_spark.catalog``;
-this module is the thin adapter the driver imports.
+this module is the thin adapter over it.
 """
 
 from __future__ import annotations

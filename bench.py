@@ -1,14 +1,12 @@
-"""Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
+"""Benchmark harness: runs every catalog query at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
 JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
-"queries": {name: sec}, "sf": ..., "oracle_total_warm": ...,
-"oracle_queries": {...}}.
+"queries": {name: sec}, "n_failed": ..., "failed": [...], "sf": ...,
+"oracle_total_warm": ..., "oracle_queries": {...}}.
 
-Each query is executed to a noop-datasource write: unlike count(), which
-lets Catalyst prune projection expressions and unused aggregates (so
-narrow text queries and expression-heavy aggregates would be timed on
-pruned plans), the noop sink consumes EVERY output column, so the
-measured time covers the full plan Spark would run for a real consumer.
+Each cell is the median of $SPARK_GRAFT_BENCH_REPS (default 3) noop-sink
+runs after an untimed warm run, timed by tools/measure.py. If any query
+fails, ``value`` is null and the exit code is 1.
 
 The DuckDB oracle suite is also timed on the same parquet (one cold pass
 then one warm pass, warm reported per-query) so the Spark-vs-baseline
@@ -25,27 +23,17 @@ import time
 REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
 
-ORACLE_TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
-
-
-def run_full(df) -> None:
-    """Execute the complete plan, consuming all output columns."""
-    df.write.format("noop").mode("overwrite").save()
-
 
 def time_oracles(sf_dir: str) -> tuple[float, float, dict[str, float]]:
     """DuckDB oracle wall-times on the same parquet: (cold_total,
     warm_total, warm_per_query). Skips queries with no oracle SQL."""
     import duckdb
 
-    import __spark_entry__ as entrymod
+    from dropbox_duckdb_playground_spark import catalog
 
-    oracles = entrymod.oracle_sql()
+    oracles = catalog.oracle_sql()
     con = duckdb.connect()
-    for t in ORACLE_TABLES:
+    for t in catalog.TABLES:
         p = os.path.join(sf_dir, f"{t}.parquet")
         if os.path.exists(p):
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
@@ -69,100 +57,30 @@ def time_oracles(sf_dir: str) -> tuple[float, float, dict[str, float]]:
     return totals[0], totals[1], per_q
 
 
-def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    import __spark_entry__ as entrymod
-    from dropbox_duckdb_playground_spark.session import get_spark
-
-    spark = get_spark("bench")
-    qs = entrymod.queries()
-
-    # warm up the JVM/codegen on the smallest sf so measured times are the
-    # steady-state plan execution, not first-call JIT compilation. Every
-    # query runs once through the SAME noop sink as the timed pass: the
-    # heavy expression trees (simhash bit-sums, cosine folds) each JIT
-    # their own generated classes.
-    from dropbox_duckdb_playground_spark.session import quiesce
-
-    warm_dir = "/root/testdata/sf0.001"
-    if os.path.isdir(warm_dir) and os.environ.get("SPARK_GRAFT_NO_WARM") != "1":
-        for fn in qs.values():
-            try:
-                run_full(fn(spark, warm_dir))
-            except Exception:
-                pass
-            quiesce(spark)
-
-    # Two timed reps per query, best kept: single-JVM local mode has a
-    # heavy-tailed scheduler/GC noise floor (occasional 5-20x outliers
-    # on an otherwise-stable query), and the DuckDB oracle column is
-    # already a second (warm) run — best-of-2 measures the same
-    # steady-state throughput on both sides.
-    reps = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "2"))
-    # Volatile rows get extra reps, same best-of aggregator (r13 VERDICT
-    # #3: q105's single best-of-2 cell swung 3.3-6.9s across same-code
-    # runs — 31% of the r13 round-over-round delta — while its
-    # interleaved median held steady; the sf1 tools already run it at
-    # median-of-5 per the VOLATILE_REPS doctrine in tools/scaling.py).
-    # Methodology note: this changes ONE row's rep count (2 -> 5), not
-    # what is timed or how; disclosed in OPTIMIZATION_r14.md.
-    volatile_reps = {"q105_triangle_count": 5}
-    # Fresh session every N queries: a single long-lived local JVM
-    # degrades through hundreds of executions (GC/broadcast/shuffle
-    # tracker state that quiesce() cannot fully release) — measured up
-    # to ~1.8x inflation on heavy queries late in the run, the same
-    # effect tools/scaling.py corrects in its sf1 batch. Restarting
-    # keeps every query's measurement a fresh-session steady state.
-    restart_every = int(os.environ.get("SPARK_GRAFT_BENCH_RESTART", "40"))
-    timings: dict[str, float] = {}
-    for qi, (name, fn) in enumerate(qs.items()):
-        if qi and restart_every and qi % restart_every == 0:
-            spark.stop()
-            spark = get_spark("bench")
-            if os.path.isdir(warm_dir):
-                try:  # re-JIT this query's shape before its timed reps
-                    run_full(fn(spark, warm_dir))
-                except Exception:
-                    pass
-                quiesce(spark)
-        if name in volatile_reps and os.environ.get("SPARK_GRAFT_NO_WARM") != "1":
-            # untimed TARGET-scale warm rep, the other half of the
-            # VOLATILE_REPS doctrine (tools/scaling.py): the first
-            # execution of this row's shapes in a restarted JVM pays a
-            # one-time codegen/heap cost the sf0.001 warm pass does not
-            # compile away, and the bench restarts every 40 queries.
-            try:
-                run_full(fn(spark, sf_dir))
-            except Exception:
-                pass
-            quiesce(spark)
-        best = -1.0
-        for _ in range(max(reps, volatile_reps.get(name, 0))):
-            t0 = time.time()
-            try:
-                run_full(fn(spark, sf_dir))
-                dt = round(time.time() - t0, 3)
-                best = dt if best < 0 else min(best, dt)
-            except Exception as exc:  # record failures as -1, keep benching
-                sys.stderr.write(f"bench: {name} failed: {exc}\n")
-                break
-            # quiesce between runs (outside the timed window): release
-            # this query's materialized blocks, collect Python-side plan
-            # cycles so ContextCleaner can reclaim shuffles/broadcasts,
-            # and absorb the GC pause they'd otherwise trigger mid-run
-            quiesce(spark)
-        timings[name] = best
-
-    total = round(sum(t for t in timings.values() if t >= 0), 3)
-    sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "")
-
-    out = {
+def summarise(timings: dict[str, float | None]) -> dict:
+    """The bench's headline fields from per-query medians (None = the
+    query failed). A failed query is listed and nulls the total, which
+    would otherwise shrink by that query's time; its cell reads -1."""
+    failed = [name for name, t in timings.items() if t is None]
+    return {
         "metric": "catalog_total_wall",
-        "value": total,
+        "value": None if failed else round(sum(timings.values()), 3),
         "unit": "sec",
-        "queries": timings,
-        "sf": float(sf) if sf else None,
+        "queries": {name: -1.0 if t is None else t for name, t in timings.items()},
+        "n_failed": len(failed),
+        "failed": failed,
     }
+
+
+def main() -> int:
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    from dropbox_duckdb_playground_spark import catalog
+    from tools.measure import measure
+
+    results = measure(sf_dir, list(catalog.REGISTRY))
+    out = summarise({name: t.median for name, t in results.items()})
+    sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "")
+    out["sf"] = float(sf) if sf else None
     if os.environ.get("SPARK_GRAFT_NO_ORACLE") != "1":
         cold, warm, per_q = time_oracles(sf_dir)
         out["oracle_total_cold"] = cold
@@ -193,15 +111,18 @@ def main() -> None:
         "unit": out["unit"],
         "sf": out["sf"],
         "queries": {
-            name.split("_", 1)[0]: round(t, 2) for name, t in timings.items()
+            name.split("_", 1)[0]: round(t, 2) for name, t in out["queries"].items()
         },
+        "n_failed": out["n_failed"],
+        "failed": [name.split("_", 1)[0] for name in out["failed"]],
         "full": os.path.basename(out_path),
     }
     for k in ("oracle_total_cold", "oracle_total_warm"):
         if k in out:
             compact[k] = out[k]
     print(json.dumps(compact, separators=(",", ":")), flush=True)
+    return 1 if out["n_failed"] else 0
 
 
 if __name__ == "__main__":
-    main()
+    raise SystemExit(main())

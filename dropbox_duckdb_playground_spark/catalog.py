@@ -46,12 +46,20 @@ MINHASH_MINS = ", ".join(
 )
 
 
+# The parquet tables under an sf directory, read by the queries through
+# ``load`` and by the DuckDB oracles as views of the same name.
+TABLES = [
+    "region", "nation", "customer", "supplier", "part",
+    "orders", "lineitem", "events", "documents", "embeddings",
+]
+
+
 # Memoized base scans: one schema-inference (parquet footer read) per
 # table per session, exactly like the DuckDB oracle's CREATE VIEW —
 # which the bench registers ONCE outside the timer. DataFrames are
 # immutable lazy plans, so sharing the object across queries is safe;
 # data is still read fresh at every action. Keyed by applicationId so
-# session restarts (tools/scaling.py) never reuse a dead plan.
+# session restarts (tools/measure.py) never reuse a dead plan.
 # Value is (parquet mtime_ns, plan): a same-path rewrite REPLACES the
 # entry on next load instead of accumulating stale-mtime siblings.
 _LOAD_CACHE: dict[tuple[str, str], tuple[int, DataFrame]] = {}
@@ -2158,7 +2166,7 @@ def q57_group_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle; at 100 TB use approx_percentile (t-digest sketch,
     mergeable, constant state).
 
-    r11 named decomposition (tools/decompose_q57.py): the row's cost
+    r11 named decomposition (the r11 probe, git history): the row's cost
     is the HIGH-CARDINALITY price column — percentile(quantity) 0.45s
     vs percentile(price) 1.22s of the 1.42s total at sf0.1 (the
     partial state is a per-group value->count map, input-sized on a
@@ -2907,7 +2915,7 @@ def q73_promo_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     int pair is a narrower exchange key (guide: shuffle fewer bytes,
     move per-row work past the aggregation). Identical strings by
     construction (4-digit years, zero-padded months). Measured r13
-    interleaved A/B at sf0.1: tools/decompose_q73.py."""
+    interleaved A/B at sf0.1: OPTIMIZATION_r13.md."""
     p = F.broadcast(
         load(spark, sf_dir, "part").select("p_partkey", "p_type")
     )
@@ -3311,7 +3319,7 @@ def q80_boilerplate(spark: SparkSession, sf_dir: str) -> DataFrame:
     reused exchange.
 
     The gram exchange keys on xxhash64(shingle) with the string DROPPED
-    before the shuffle (r9, tools/decompose_q80.py: paired-delta A/B at
+    before the shuffle (the r9 probe, git history: paired-delta A/B at
     sf1, digest wins 5/6 pairs, median +0.13s, and sheds ~20 bytes/row
     of a corpus-shingle-sized exchange). The digest is the COUNT key,
     so a collision would merge two grams' doc-counts: negligible below
@@ -3321,7 +3329,7 @@ def q80_boilerplate(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``SPARK_GRAFT_GRAM_KEY_BITS=128`` (r9 ADVICE: opt-in switch, not a
     code edit; any value other than 128 keeps the 64-bit key).
 
-    Measured dead-end (r10, tools/decompose_q80b.py, fingerprints
+    Measured dead-end (the r10 probe, git history; fingerprints
     equal, interleaved 3-rep medians at sf1): replacing the window
     with a map-side-combined gram aggregate + BROADCAST join — which
     removes the corpus-shingle-sized gram exchange AND WindowExec's
@@ -4127,7 +4135,7 @@ def q93_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     because every degree of freedom (portable md5 hash, integer-shift
     register sums, one final double division) is pinned (sketches.py).
 
-    ADJUDICATED STOP (r7, tools/decompose_q93.py at sf0.1, this plan
+    ADJUDICATED STOP (the r7 probe, git history; at sf0.1, this plan
     1.45s on the measuring host): the r6 "md5 parity tax" hypothesis
     is REFUTED as the dominant term — xxhash64 registers save only
     0.12s of 1.64s (7%), and a hash-FREE variant still ran 1.41s, so
@@ -4331,7 +4339,7 @@ def q95_bloom_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     Because the driver payload is bounded by construction, the old
     dual regime (capped literal path / join-form fallback) collapses
     to this single scale-safe form. Interleaved A/B
-    (tools/decompose_q95.py): sf0.1 wash (1.924 vs 2.03 median-of-5),
+    (OPTIMIZATION_r14.md): sf0.1 wash (1.924 vs 2.03 median-of-5),
     sf1 new form wins EVERY pair (2.062 -> 1.969 median-of-3),
     identical output digests at sf0.001/0.1/1 every run. Caching the
     exploded TRAIN shingle table was measured SLOWER than recomputing
@@ -4639,7 +4647,7 @@ def q100_curation_policy(spark: SparkSession, sf_dir: str) -> DataFrame:
     ROUNDED features, so the policy bit can't flip on float noise
     between engines.
 
-    r11 (tools/decompose_q100.py): quality features, the per-doc
+    r11 (the r11 probe, git history): quality features, the per-doc
     distinct-3-gram count, and lang now come from ONE tokenize pass
     (the shared text.quality_feature_exprs / QUALITY_BLEND_NUM helpers
     that quality_score itself builds from — no inline copy to diverge,
@@ -4817,7 +4825,7 @@ def q101_tpch_q2(spark: SparkSession, sf_dir: str) -> DataFrame:
     computed by the identical expression in both engines, so the
     equality join on the min is bit-exact.
 
-    r11 decomposition (tools/decompose_tpch.py): the selective part
+    r11 decomposition (the r11 probe, git history): the selective part
     filter (mid-size LARGE, ~5% of parts) is pushed BELOW the ps
     distinct via ``part_filter`` — the distinct exchange and the md5
     key derivations run on the surviving pairs only. Interleaved
@@ -4905,7 +4913,7 @@ def q102_tpch_q11(spark: SparkSession, sf_dir: str) -> DataFrame:
     double comparison is computed from those identical decimals in the
     same expression order in both engines.
 
-    r11 measured dead end (tools/decompose_tpch.py): pushing the
+    r11 measured dead end (the r11 probe, git history): pushing the
     region-2 supplier filter BELOW the ps distinct (broadcast-join the
     pair projection before the exchange) tied at sf0.1 (1.414s vs
     1.401s) and LOST at sf1 (2.456s vs 2.108s, interleaved median-of-
@@ -4985,7 +4993,7 @@ def q103_tpch_q20(spark: SparkSession, sf_dir: str) -> DataFrame:
     micro-unit money pattern), so the threshold bit is exact in both
     engines with whole-stage-codegen integer sums.
 
-    r11 decomposition (tools/decompose_tpch.py): the ps DISTINCT and
+    r11 decomposition (the r11 probe, git history): the ps DISTINCT and
     the 1997 shipped aggregate are FUSED — one widget-filtered
     lineitem scan, one (partkey, suppkey) exchange producing both the
     distinct pair (the groupBy keys) and a CONDITIONAL 1997 quantity
@@ -5137,11 +5145,11 @@ def q105_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     grouped form (groupBy l_orderkey + sort_array(collect_set) +
     posexplode x slice — one narrow exchange, no join) was adopted
     briefly in r13 after winning every interleaved pair at sf0.1
-    (3.746s -> 3.330s median-of-5, tools/decompose_q105b.py) and then
+    (3.746s -> 3.330s median-of-5, OPTIMIZATION_r13.md) and then
     REVERTED on the sf1 evidence: at 1000x the grouped form lost every
     interleaved pair by ~50% (selfjoin 21.2/21.9/24.5s vs grouped
     48.2/33.5/30.6s, identical n_triangles=18,844,880 every rep,
-    tools/decompose_q105_sf1edge.py, recorded in OPTIMIZATION_r13.md)
+    recorded in OPTIMIZATION_r13.md)
     — the
     ObjectHashAggregate + double-Generate chain scales worse than the
     join, whose build side stops fitting a broadcast exactly when the
@@ -6433,49 +6441,9 @@ def q124_ab_test(spark: SparkSession, sf_dir: str) -> DataFrame:
 # public API used by __spark_entry__.py
 
 
-# Deterministic per-round rotation of the driver's correctness window.
-# The driver's gate samples the FIRST 50 entries of queries() each
-# round while the catalog holds 124 — a fixed order would certify the
-# same 50 forever. Rounds 1-4 ran at offset 0; from round 5 onward the
-# committed offset advances by 50 per round:
-#     offset = (50 * (CATALOG_ROUND - 4)) % 124   for CATALOG_ROUND >= 5
-# so the driver's own CORRECTNESS artifacts certify the whole catalog
-# across ~3 consecutive rounds: r5 -> q51..q100, r6 -> q101..q124+
-# q01..q26, r7 -> q27..q76, r8 -> q77..q124+q01..q02, ... Both
-# constants MUST be bumped together each round; the check below fails
-# the whole import (and thus every test and the driver gate) if one is
-# bumped without the other, so a stale window cannot silently
-# re-certify the same 50 queries. The full 124-query local mirror
-# (tools/check.py transcripts) is committed every round regardless.
-#
-# Re-certification schedule for the r6 driver reds (fixed in r7):
-# q115_positional_index / q117_array_suite (array outputs -> strings)
-# and q124_ab_test (try_divide) fell inside the r8 window (offset 76
-# -> q77..q124 + q01..q02) and got their first driver greens in
-# CORRECTNESS_r08 — every catalog query is now driver-certified at
-# least once. r9 (offset 2) re-certifies q03..q52, continuing the
-# steady-state cycle.
-CATALOG_ROUND = 14
-DRIVER_WINDOW_OFFSET = 4
-if not (CATALOG_ROUND >= 5 and DRIVER_WINDOW_OFFSET == (50 * (CATALOG_ROUND - 4)) % 124):
-    # explicit raise, not `assert`: the guard must survive `python -O`
-    raise RuntimeError(
-        "DRIVER_WINDOW_OFFSET is stale: bump CATALOG_ROUND and "
-        "DRIVER_WINDOW_OFFSET together (offset = 50*(round-4) mod 124)"
-    )
-
-
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """Catalog rotated by DRIVER_WINDOW_OFFSET from REGISTRATION
-    (source) order — deterministic across runs. q01-q50 of the source
-    order span every SURVEY §2 family (S/P/F/J/A/W/U/M/V/E/N/C) plus
-    one representative of each LLM-pipeline family; the rotation only
-    changes WHICH 50 land in the driver's per-round window (see
-    DRIVER_WINDOW_OFFSET above)."""
-    names = list(REGISTRY)
-    k = DRIVER_WINDOW_OFFSET % len(names)
-    rotated = names[k:] + names[:k]
-    return {name: REGISTRY[name].fn for name in rotated}
+    """Every catalog query, in registration (source) order."""
+    return {name: qd.fn for name, qd in REGISTRY.items()}
 
 
 def oracle_sql() -> dict[str, str]:

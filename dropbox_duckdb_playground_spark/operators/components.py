@@ -322,7 +322,7 @@ def pagerank(
       for eager per-round materialize/persist variants — job-launch
       overhead, not recomputation, was the cost.
 
-    Prelude job count adjudicated (r12, tools/decompose_q92.py): the
+    Prelude job count adjudicated (the r12 probe, git history): the
     three serial driver actions (edge materialize, node materialize,
     count) resist the q62/q107 concurrent-staging trick — overlapping
     an independent nodes-distinct count under the edge materialize
@@ -485,7 +485,7 @@ def triangle_count(
       longer needs a materialize barrier in this regime because its
       ONLY consumer is the adjacency aggregate (the regime gate counts
       the checkpointed `und` instead — same number, orientation is
-      1:1). Measured r13 (tools/decompose_q105.py, interleaved): one
+      1:1). Measured r13 (OPTIMIZATION_r13.md, interleaved): one
       fewer checkpoint job, one fewer broadcast; plan diff in
       plans/r13/q105_triangle_count_{before,after}.txt.
     - m > limit: enumerate the wedge stream and probe it against the

@@ -24,7 +24,7 @@ def _concurrent_writes(*thunks) -> None:
     """Submit independent staging writes from threads so Spark's
     scheduler runs them as parallel jobs — the codebook/centroid side
     is driver-literal data, so it never contends with the corpus scan.
-    Measured r11 (tools/decompose_q62q107.py, interleaved median-of-3):
+    Measured r11 (the r11 probe, git history; interleaved median-of-3):
     q62 2.19s -> 2.09s at sf0.1, 2.52s -> 2.13s at sf1, with the
     explicit-schema read-back below.
 
@@ -377,8 +377,8 @@ def ivf_assign(
         # replay probe + re-rank over exactly these files. The two
         # writes are independent jobs — submit them concurrently, and
         # read back with the known schema (skips the footer-inference
-        # job): measured 2.52s -> 2.13s on q62 at sf1 (r11,
-        # tools/decompose_q62q107.py).
+        # job): measured 2.52s -> 2.13s on q62 at sf1 (the r11 probe,
+        # git history).
         a_path = os.path.join(stage_dir, "assigned")
         _concurrent_writes(
             lambda: vecs.mapInPandas(assign_lists, schema=out_schema)

@@ -183,7 +183,7 @@ def winnow_fingerprints(
     one partition-by-doc shuffle; at 100 TB docs are the natural partition
     unit so the shuffle is one pass and windows never cross executors.
 
-    r13 measured dead end (tools/decompose_q42.py): an array-HOF form
+    r13 measured dead end (OPTIMIZATION_r13.md): an array-HOF form
     (transform/slice/array_min computing hs + window-mins in-row, no
     posexplode, no Window — plan shape 1 Exchange vs this form's 2) was
     built, oracle-verified at sf0.001-0.1, and measured SLOWER in every
@@ -522,7 +522,7 @@ def bm25_topk(
     (broadcast-join prune BEFORE the window), and the final top-k
     window shuffles just those rows, pre-trimmed by WindowGroupLimit.
 
-    Barrier choice re-adjudicated r9 (tools/decompose_q106.py,
+    Barrier choice re-adjudicated r9 (the r9 probe, git history;
     interleaved at sf1): eager checkpoint 2.18s, lazy pin/persist
     1.77s, no barrier 1.84s. pin ~= none is the tell — the lazy cache
     races its concurrent consumer stages (each computes uncached
@@ -572,7 +572,7 @@ def bm25_topk(
     # ONE vocabulary pass over tf serves BOTH tot_dl and the query
     # terms: sum(cnt) over the vocab aggregate == sum(tf) == total
     # token mass, so the former full-tf tot_dl pass is gone (r9,
-    # tools/decompose_q106.py: wall wash at sf1 — median delta +0.03s,
+    # the r9 probe, git history: wall wash at sf1 — median delta +0.03s,
     # rows identical — but one fewer corpus-sized pass over the pinned
     # tf table; at 100 TB that pass is a full re-read of the
     # checkpoint, while the vocab table it replaces it with is

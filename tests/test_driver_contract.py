@@ -15,7 +15,9 @@ values are right (round-6 reds):
    assume its own session config.
 
 These tests execute the whole catalog at sf0.001 under an ANSI-enabled
-session and assert both properties, so the classes cannot recur.
+session and assert both properties, so the classes cannot recur. The
+same run compares every query's rows with its DuckDB oracle through
+``tools/check.py``'s canonical digest, so a wrong value fails Tier-1.
 """
 
 from __future__ import annotations
@@ -26,11 +28,9 @@ import duckdb
 import pytest
 from pyspark.sql.types import ArrayType, MapType
 
+from dropbox_duckdb_playground_spark.catalog import TABLES
+
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
 
 needs_data = pytest.mark.skipif(
     not os.path.isdir(SF_DIR), reason="driver-generated testdata absent"
@@ -39,15 +39,22 @@ needs_data = pytest.mark.skipif(
 
 @needs_data
 def test_catalog_green_under_ansi_with_scalar_outputs(spark):
-    """Run all 124 queries ANSI-on; no errors, no array/map outputs."""
+    """Run all 124 queries ANSI-on; no errors, no array/map outputs, and
+    every result digest-equal to its DuckDB oracle."""
     import __spark_entry__ as entrymod
+    from tools.check import frame_digest
 
     qs = entrymod.queries()
+    oracles = entrymod.oracle_sql()
     assert len(qs) >= 124
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{os.path.join(SF_DIR, t)}.parquet'")
     prior = spark.conf.get("spark.sql.ansi.enabled")
     spark.conf.set("spark.sql.ansi.enabled", "true")
     bad_types: list[tuple[str, str, str]] = []
     errors: list[tuple[str, str]] = []
+    mismatches: list[str] = []
     try:
         for name, fn in qs.items():
             try:
@@ -57,16 +64,26 @@ def test_catalog_green_under_ansi_with_scalar_outputs(spark):
                         bad_types.append((name, f.name, f.dataType.simpleString()))
                 # collect the way the driver does — ANSI runtime errors
                 # (divide-by-zero, cast overflow) only surface on action
-                df.toPandas()
+                got = frame_digest(df.toPandas())
+                if name in oracles:
+                    want = frame_digest(con.execute(oracles[name]).df())
+                    if got != want:
+                        cols = "" if got[1] == want[1] else f" cols {got[1]} vs {want[1]}"
+                        mismatches.append(
+                            f"{name}: spark {got[0]} rows {got[2][:8]} != "
+                            f"oracle {want[0]} rows {want[2][:8]}{cols}"
+                        )
             except Exception as exc:  # noqa: BLE001 - report all offenders at once
                 errors.append((name, str(exc).splitlines()[0][:200]))
     finally:
         spark.conf.set("spark.sql.ansi.enabled", prior)
+        con.close()
     assert not bad_types, (
         "top-level array/map output columns break the driver's pandas "
         f"canonicalizer — serialize with array_join: {bad_types}"
     )
-    assert not errors, f"catalog queries failed under ANSI mode: {errors}"
+    assert not errors, f"catalog queries (or their oracles) raised under ANSI mode: {errors}"
+    assert not mismatches, f"catalog results differ from their DuckDB oracle: {mismatches}"
 
 
 @needs_data

@@ -16,11 +16,9 @@ import os
 import duckdb
 import pytest
 
+from dropbox_duckdb_playground_spark.catalog import TABLES
+
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
 
 
 @pytest.mark.skipif(

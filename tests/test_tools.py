@@ -1,14 +1,86 @@
 """Unit tests for the measurement tooling that the round artifacts
-depend on — pure-python, no Spark session."""
+depend on — pure-python, except the ``tools/measure.py`` failure-path
+test, which runs on the shared test session."""
 
 from __future__ import annotations
 
+import glob
+import importlib
 import os
 import sys
 
-sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools"))
+import pytest
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+sys.path.insert(0, os.path.join(REPO, "tools"))
 
 from compare_bench import _series, compare  # noqa: E402
+from tools.measure import WARM_DIR  # noqa: E402
+
+TOOL_MODULES = sorted(
+    os.path.splitext(os.path.basename(p))[0]
+    for p in glob.glob(os.path.join(REPO, "tools", "*.py"))
+)
+
+
+@pytest.mark.parametrize("name", TOOL_MODULES)
+def test_tool_module_imports(name):
+    """Every tool imports cleanly (``main()`` is not run), so a dangling
+    import of a deleted name fails here, not at the next manual run."""
+    importlib.import_module(f"tools.{name}")
+
+
+def test_bench_summarise_fails_loudly():
+    """A failed query nulls the total and is named; it never shrinks
+    the total by dropping out of the sum."""
+    from bench import summarise
+
+    ok = summarise({"q01_a": 1.0, "q02_b": 2.5})
+    assert ok["value"] == 3.5 and ok["n_failed"] == 0 and ok["failed"] == []
+    assert ok["queries"] == {"q01_a": 1.0, "q02_b": 2.5}
+
+    bad = summarise({"q01_a": 1.0, "q02_b": None})
+    assert bad["value"] is None
+    assert bad["n_failed"] == 1 and bad["failed"] == ["q02_b"]
+    assert bad["queries"] == {"q01_a": 1.0, "q02_b": -1.0}
+    assert {"metric", "unit"} <= set(bad)
+
+
+@pytest.mark.skipif(not os.path.isdir(WARM_DIR), reason="warm-run testdata absent")
+def test_measure_reports_failures(spark, tmp_path):
+    """A query that raises on its warm run or on a timed rep is reported
+    failed with no cell; a good query gets one rep per requested rep."""
+    from tools.measure import time_query
+
+    calls: list[str] = []
+
+    def fails_on_warm(spark, sf_dir):
+        calls.append(sf_dir)
+        raise ValueError("boom on warm")
+
+    def fails_on_timed(spark, sf_dir):
+        if sf_dir != WARM_DIR:
+            raise RuntimeError("boom on timed")
+        return spark.range(3)
+
+    def good(spark, sf_dir):
+        return spark.range(3)
+
+    sf = str(tmp_path)
+    warm = time_query(spark, fails_on_warm, sf, reps=2)
+    assert warm.error == "ValueError: boom on warm"
+    assert warm.median is None and warm.reps == []
+    assert calls == [WARM_DIR]  # no timed rep after a failed warm run
+
+    timed = time_query(spark, fails_on_timed, sf, reps=2)
+    assert timed.error == "RuntimeError: boom on timed"
+    assert timed.median is None
+
+    hooks: list[int] = []
+    res = time_query(spark, good, sf, reps=3, after_rep=lambda: hooks.append(1))
+    assert res.error is None and len(res.reps) == 3 and len(hooks) == 3
+    assert res.median is not None and res.median >= 0
 
 
 def test_series_flat_and_rich_shapes():

@@ -36,10 +36,7 @@ import duckdb
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
+from dropbox_duckdb_playground_spark.catalog import TABLES  # noqa: E402
 
 
 def norm_cell(v) -> str:

@@ -5,24 +5,22 @@ host whose background load drifted over the night, three runs of the
 SAME code+data read 83.3s / 107.0s / 148.2s total while the oracle
 column moved 463 -> 538 -> 448s, and per-query ratios (q106 9.67x vs
 SCALING's same-night slope-1.14 reading) became committed noise. The
-fix is the protocol every decision-grade comparison in this repo
-already uses (tools/decompose_*.py): INTERLEAVE the engines per query
-— spark rep, oracle rep, spark rep, oracle rep, all within a ~minute
-window — so host drift hits both columns of a row equally, and commit
-the MEDIAN of reps plus the spread and a loadavg stamp so a reader can
-see whether a row is trustworthy without archaeology.
+fix is the protocol the r-N per-query probes used (git history):
+INTERLEAVE the engines per query — spark rep, oracle rep, spark rep,
+oracle rep, all within a ~minute window — so host drift hits both
+columns of a row equally, and commit the MEDIAN of reps plus the
+spread and a loadavg stamp so a reader can see whether a row is
+trustworthy without archaeology.
 
-Per query:
-  1. shape-warm Spark on sf0.01 (JIT/codegen, untimed)
-  2. rep loop (REPS=3): timed Spark noop-write on sf1, then a timed
-     DuckDB subprocess run on the same sf1 parquet (page cache shared)
+Per query, through tools/measure.py:
+  1. untimed sf0.001 warm run of the query (JIT/codegen)
+  2. rep loop ($SPARK_GRAFT_BENCH_REPS, default 3): timed Spark
+     noop-write on sf1, then a timed DuckDB subprocess run on the same
+     sf1 parquet (page cache shared)
   3. record per-engine rep lists, medians, relative spread, loadavg
 
-Excluded rows mirror tools/sf1_mirror.EXCLUDED (output-size-infeasible
-uncapped baselines), recorded in the artifact with their reasons.
-
 Usage: python tools/sf1_bench.py [out_json] [query ...]
-       (default SF1_BENCH.json, all SF1_QUERIES)
+       (default SF1_BENCH.json, every catalog query)
 """
 
 from __future__ import annotations
@@ -32,29 +30,15 @@ import os
 import statistics
 import subprocess
 import sys
-import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
-sys.path.insert(0, os.path.join(REPO, "tools"))
 
-from scaling import SF1_QUERIES, VOLATILE_REPS  # noqa: E402
-from sf1_mirror import EXCLUDED  # noqa: E402
+from dropbox_duckdb_playground_spark.catalog import TABLES  # noqa: E402
+from tools.measure import default_reps, measure  # noqa: E402
 
 SF1 = os.path.join(REPO, "testdata_sf1")
-SF_WARM = "/root/testdata/sf0.01"
 ORACLE_TIMEOUT = 900  # seconds per oracle rep subprocess
-# 3 reps, not 2: the median of TWO reps is their mean, so a single
-# transient host event poisons the row (first r10 run: q91's spark reps
-# read [4.8, 48.9] while a 4-rep isolation probe read 4.4/2.3/2.9/2.0 —
-# the 48.9 was the host, not the plan). A true median of 3 absorbs one
-# outlier rep per engine per row.
-REPS = 3
-
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
 
 # One timed run per subprocess: the rep cadence (and hence warm/cold
 # mix) is controlled by the interleaving loop below, not hidden inside
@@ -100,7 +84,7 @@ def _spread(reps: list[float]) -> float:
 
 
 def oracle_row_fields(
-    oracle_reps: list[float], oracle_errs: list[str], reps: int = REPS
+    oracle_reps: list[float], oracle_errs: list[str], reps: int
 ) -> dict:
     """Finalize one row's oracle fields. A row carries a median ONLY at
     the full rep count the artifact's protocol string claims; a partial
@@ -127,81 +111,42 @@ def main() -> int:
     out_json = os.path.join(REPO, "SF1_BENCH.json")
     if args and args[0].endswith(".json"):
         out_json = args.pop(0)
-    import __spark_entry__ as entrymod
-    from dropbox_duckdb_playground_spark.session import get_spark, quiesce
+    from dropbox_duckdb_playground_spark import catalog
 
-    qs = entrymod.queries()
-    oracles = entrymod.oracle_sql()
-    names = [q for q in SF1_QUERIES if q in qs and q not in EXCLUDED]
-    if args:
-        names = [q for q in names if q in args]
+    oracles = catalog.oracle_sql()
+    names = [q for q in catalog.REGISTRY if not args or q in args]
+    reps = default_reps()
+    loadavg: dict[str, float] = {}
+    oracle_reps: dict[str, list[float]] = {q: [] for q in names}
+    oracle_errs: dict[str, list[str]] = {q: [] for q in names}
 
-    spark = get_spark("sf1bench")
-    spark.sparkContext.setLogLevel("ERROR")
-
-    def fresh_session():
-        nonlocal spark
-        spark.stop()
-        spark = get_spark("sf1bench")
-        spark.sparkContext.setLogLevel("ERROR")
+    def oracle_rep(name: str) -> None:
+        # keep attempting ALL reps after a failure (r10 ADVICE): a
+        # transient-error row either recovers to a full median-of-reps
+        # or is reported as failed — never a silent partial median
+        loadavg.setdefault(name, round(os.getloadavg()[0], 2))
+        if name in oracles:
+            o, err = _oracle_rep(oracles[name])
+            if err is not None:
+                oracle_errs[name].append(err)
+            else:
+                oracle_reps[name].append(o)
 
     results: dict[str, dict] = {}
-    for i, name in enumerate(names):
-        # same isolation cadence as tools/scaling.py: restart the JVM
-        # every few heavy rows, and immediately after any >15s row, so
-        # accumulated GC/shuffle-tracker state cannot inflate later rows
-        if i % 6 == 0:
-            fresh_session()
-        fn = qs[name]
-        sql = oracles.get(name)
-        row: dict = {"loadavg": round(os.getloadavg()[0], 2)}
-        spark_reps: list[float] = []
-        oracle_reps: list[float] = []
-        oracle_errs: list[str] = []
-        # volatile rows (tools/scaling.VOLATILE_REPS — q105) run
-        # median-of-5 so this artifact and SCALING.md agree without
-        # per-round manual arbitration (r12 VERDICT #5)
-        n_reps = VOLATILE_REPS.get(name, REPS)
-        try:
-            fn(spark, SF_WARM).write.format("noop").mode("overwrite").save()
-            quiesce(spark)
-            if name in VOLATILE_REPS:
-                # one UNTIMED warm rep at the target scale: the first
-                # sf1 execution in a JVM pays a ~100-130s one-time cost
-                # on these rows (r13 probe — codegen paths the sf0.01
-                # warm never compiles + first-touch heap growth); timed
-                # reps must measure the settled regime
-                fn(spark, SF1).write.format("noop").mode("overwrite").save()
-                quiesce(spark)
-            for _ in range(n_reps):
-                t0 = time.time()
-                fn(spark, SF1).write.format("noop").mode("overwrite").save()
-                spark_reps.append(time.time() - t0)
-                quiesce(spark)
-                if sql is not None:
-                    # keep attempting ALL reps after a failure (r10
-                    # ADVICE): a transient-error row either recovers to
-                    # a full median-of-REPS or is reported as failed —
-                    # never a silent partial median
-                    o, err = _oracle_rep(sql)
-                    if err is not None:
-                        oracle_errs.append(err)
-                    else:
-                        oracle_reps.append(o)
-            row["spark"] = round(statistics.median(spark_reps), 3)
-            row["spark_reps"] = [round(x, 3) for x in spark_reps]
-            row["spark_spread"] = _spread(spark_reps)
-            if spark_reps and max(spark_reps) > 15:
-                fresh_session()
-        except Exception as exc:
+    for name, t in measure(SF1, names, reps, after_rep=oracle_rep).items():
+        row: dict = {"loadavg": loadavg.get(name)}
+        if t.error is not None:
             row["spark"] = None
-            row["spark_err"] = str(exc)[:200]
-            fresh_session()
-        if sql is None:
+            row["spark_err"] = t.error
+        else:
+            row["spark"] = t.median
+            row["spark_reps"] = t.reps
+            row["spark_spread"] = _spread(t.reps)
+        if name not in oracles:
             row["oracle"] = None
             row["oracle_err"] = "rows-only query (no oracle)"
         else:
-            row.update(oracle_row_fields(oracle_reps, oracle_errs, reps=n_reps))
+            row.update(oracle_row_fields(oracle_reps[name], oracle_errs[name], reps))
         results[name] = row
         print(
             f"SF1BENCH {name}: spark={row.get('spark')} "
@@ -220,11 +165,10 @@ def main() -> int:
         "sf": 1,
         "protocol": (
             "interleaved per query (spark rep / oracle rep alternating in "
-            f"one ~minute window), median of {REPS} reps per engine "
-            f"({', '.join(f'{q}: {n}' for q, n in VOLATILE_REPS.items())}"
-            " — volatile rows at higher rep count), "
-            "shape-warmed Spark session, noop write vs DuckDB fetchall on "
-            "the same sf1 parquet; per-row loadavg + rep spread recorded"
+            f"one ~minute window), median of {reps} reps per engine, "
+            "sf0.001-warmed Spark session (tools/measure.py), noop write "
+            "vs DuckDB fetchall on the same sf1 parquet; per-row loadavg "
+            "+ rep spread recorded"
         ),
         "spark_total": round(sum(s for s, _ in both), 3),
         "oracle_total": round(sum(o for _, o in both), 3),
@@ -233,7 +177,6 @@ def main() -> int:
         ),
         "n_compared": len(both),
         "queries": results,
-        "excluded": EXCLUDED,
     }
     with open(out_json, "w") as fh:
         json.dump(artifact, fh, indent=1)
@@ -242,7 +185,7 @@ def main() -> int:
         f"{artifact['oracle_total']}s -> {artifact['ratio']}x "
         f"({len(both)} rows) -> {out_json}"
     )
-    return 0
+    return 1 if any(v["spark"] is None for v in results.values()) else 0
 
 
 if __name__ == "__main__":

@@ -3,17 +3,18 @@ the synthesized 1000x scale (testdata_sf1), one query per line, with a
 wall-clock budget per query so one infeasible oracle cannot sink the
 batch.
 
-The candidate set is tools/scaling.SF1_QUERIES (every row that gets an
-sf1 timing in SCALING.md). Queries whose sf1 RESULT SET is itself
-quadratic in the corpus (the uncapped pair miners on the saturated
-shingle space — the same data-inherent explosion SCALING.md documents)
-are excluded up front with the reason printed into the transcript: the
-mirror's collect-and-hash protocol cannot hold 10^8 pair rows on the
-driver, and the value being verified (pair semantics) is already
-hash-checked at three smaller scale factors.
+The candidate set is the whole catalog. Through r12 the five uncapped
+pair miners (q25/q26/q35/q67/q38) were excluded as output-size-
+infeasible (~10^8 pair rows on the then-saturated 31-token shingle
+space). The r12 gen_sf1 Heaps-law hapax tail de-saturated that space;
+an r13 probe of the oracles on the regenerated corpus measured the
+full-sf1 result sets at q25: 35,114 rows/2.5s, q26: 1/13.2s, q35:
+12,397/2.1s, q67: 35,114/2.1s, q38: 11,373/22.1s, so every row now runs
+here (CORRECTNESS_LOCAL_r13_sf1_miners.txt). If a corpus regen
+re-saturates the shingle space, re-probe the oracle COUNTs first.
 
 Usage: python tools/sf1_mirror.py [out_txt] [query ...]
-       (default: all SF1_QUERIES minus the documented exclusions)
+       (default: every catalog query)
 """
 
 from __future__ import annotations
@@ -25,27 +26,11 @@ import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
-sys.path.insert(0, os.path.join(REPO, "tools"))
 
-from scaling import SF1_QUERIES  # noqa: E402  (tools/ on path)
+from dropbox_duckdb_playground_spark import catalog  # noqa: E402
 
 SF1 = os.path.join(REPO, "testdata_sf1")
 PER_QUERY_TIMEOUT = 1200  # seconds, both engines + hash compare
-
-# EXCLUDED is empty since r13. History: through r12 the five uncapped
-# pair miners (q25/q26/q35/q67/q38) were excluded as
-# output-size-infeasible (~10^8 pair rows on the pre-r12 SATURATED
-# 31-token shingle space). The r12 gen_sf1 Heaps-law hapax tail
-# de-saturated that space, and an r13 probe of the oracles on the
-# regenerated corpus measured the actual full-sf1 result sets at
-# q25: 35,114 rows/2.5s, q26: 1/13.2s, q35: 12,397/2.1s,
-# q67: 35,114/2.1s, q38: 11,373/22.1s — all trivially
-# collect-and-hashable, so the miners now run in the mirror like
-# every other row (first full-sf1 hash greens recorded in
-# CORRECTNESS_LOCAL_r13_sf1_miners.txt). If a future corpus regen
-# re-saturates the shingle space, re-probe the oracle COUNTs before
-# re-adding exclusions here.
-EXCLUDED: dict[str, str] = {}
 
 
 def main() -> int:
@@ -55,20 +40,15 @@ def main() -> int:
     )
     names = args[1:] if args and args[0].endswith(".txt") else args
     if not names:
-        names = [q for q in SF1_QUERIES]
+        names = list(catalog.REGISTRY)
     lines = [
         "sf1 (1000x, testdata_sf1) correctness mirror — tools/sf1_mirror.py",
         f"per-query timeout {PER_QUERY_TIMEOUT}s; protocol = tools/check.py",
         "(row count + column names + order-insensitive value hash vs DuckDB)",
         "",
     ]
-    n_pass = n_fail = n_skip = 0
+    n_pass = n_fail = 0
     for q in names:
-        if q in EXCLUDED:
-            lines.append(f"SKIP {q}: {EXCLUDED[q]}")
-            n_skip += 1
-            print(lines[-1], flush=True)
-            continue
         t0 = time.time()
         try:
             r = subprocess.run(
@@ -95,7 +75,7 @@ def main() -> int:
             lines.append(f"TIMEOUT {q}: exceeded {PER_QUERY_TIMEOUT}s")
             n_fail += 1
         print(lines[-1], flush=True)
-    lines += ["", f"{n_pass} pass, {n_fail} fail, {n_skip} excluded (documented above)"]
+    lines += ["", f"{n_pass} pass, {n_fail} fail"]
     with open(out_txt, "w") as fh:
         fh.write("\n".join(lines) + "\n")
     print(f"wrote {out_txt}")
